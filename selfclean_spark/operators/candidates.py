@@ -9,30 +9,18 @@ hashes identically — probability 1-(1-s^r)^b of meeting at Jaccard s
 (≈0.99995 at s=0.8 with the default r=5/b=25), which buys the ≥0.99
 recall gate sub-quadratically.
 
-Physical design (one band shuffle, reused; codegen'd join expansion):
-
-    bands (id, band_hash)                   narrow, computed on the fly
-      → Exchange(band_hash)                 THE shuffle (16 B/row), once
-      → count window / cap filter / SHJ self-join   all off that shuffle
-      → (id_a < id_b) raw pair stream       whole-stage codegen
-      → groupBy(id_a, id_b) count           dedup across bands
-
-The band index is folded into ``band_hash`` by ``signatures.
-band_hashes`` (xxhash64 over the band's minhash elements + band_id),
-so the single long IS the bucket key — r3 dropped the redundant
-band_id column from the hottest exchange.  Buckets larger than
-``band_bucket_cap`` are emitted to a dropped-log instead of expanding
-(m² pairs from boilerplate/empty-file buckets) — never silent
-(SURVEY.md §4.2); rows in a dropped bucket still meet through their
-b-1 other bands, and verbatim duplicates are additionally guaranteed
-by the sha-equality fast path below.
-
-Skew: the shuffle key is band_hash — uniform by construction (xxhash64
-of minhash values); the cap bounds any residual value skew, AQE
-skew-join stays on as backstop for the later joins.
+Every blocking index in the package (LSH bands, inverted token/gram/
+fingerprint indexes, simhash blocks, sign-sketch buckets) goes through
+:func:`capped_pairs`: a key with more than ``cap`` postings is dropped
+before any pair is emitted, so a degenerate key never expands m² pairs.
+Rows in a dropped band bucket still meet through their b-1 other bands,
+and verbatim duplicates are additionally guaranteed by the
+sha-equality fast path (:func:`exact_duplicate_pairs`).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -44,149 +32,99 @@ _PAIR_EXPANSION = (
 )
 
 
+def capped_pairs(
+    postings: DataFrame,
+    key: str | list[str],
+    id_col: str,
+    cap: int,
+    observation: Observation | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Key-capped postings and their self-join pair stream.
+
+    Invariant: each key's size n is a count window over ONE hash(key)
+    exchange, evaluated before any pair is emitted.  Returns
+
+    * ``capped``: the postings of keys with n ≤ cap (all columns);
+    * ``pairs``: the self-join over keys with 2 ≤ n ≤ cap, one row per
+      (key, pair) with ``<id_col>_a < <id_col>_b``; every non-key column
+      appears suffixed ``_a``/``_b``.
+
+    Both join sides (and ``capped``) read identical exchange subtrees —
+    same not-null key filter, same window — so AQE materializes the
+    key shuffle once.  ``observation``, if given, reports
+    ``dropped_band_buckets`` (keys with n > cap) and
+    ``max_bucket_size`` after the caller's first action, with no extra
+    job.  Null keys never pair and are dropped up front.
+    """
+    keys = [key] if isinstance(key, str) else list(key)
+    w = Window.partitionBy(*keys).orderBy(id_col)
+    sized = postings.filter(
+        reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
+    ).select(
+        *postings.columns,
+        F.count(F.lit(1))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .alias("_n"),
+        F.row_number().over(w).alias("_rn"),
+    )
+    observed = sized
+    if observation is not None:
+        observed = sized.observe(
+            observation,
+            F.coalesce(
+                F.sum(F.when((F.col("_n") > cap) & (F.col("_rn") == 1), 1)),
+                F.lit(0),
+            ).alias("dropped_band_buckets"),
+            F.coalesce(F.max("_n"), F.lit(0)).alias("max_bucket_size"),
+        )
+    carried = [c for c in postings.columns if c not in keys]
+
+    def side(df: DataFrame, suffix: str) -> DataFrame:
+        return df.filter((F.col("_n") >= 2) & (F.col("_n") <= cap)).select(
+            *keys, *[F.col(c).alias(c + suffix) for c in carried]
+        )
+
+    # shuffle_hash: the codegen'd per-partition build side is bounded by
+    # the cap, and AQE never broadcasts a large posting table
+    pairs = (
+        side(observed, "_a")
+        .join(side(sized, "_b").hint("shuffle_hash"), keys)
+        .filter(F.col(id_col + "_a") < F.col(id_col + "_b"))
+    )
+    capped = sized.filter(F.col("_n") <= cap).drop("_n", "_rn")
+    return capped, pairs
+
+
 def band_pair_stream(
     bands: DataFrame,
     band_bucket_cap: int,
     observation: Observation | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(id, band_hash) → RAW co-bucket pair stream, pre-deduplication.
-
-    One output row per (pair, band) co-occurrence — callers that need
-    per-pair band counts aggregate downstream (``candidate_pairs``), and
-    callers that fuse other edge sources into the same pair-level
-    groupBy (the pipeline unions sha-equality exact edges) avoid paying
-    a second full shuffle of the pair set (r3: the
-    aggregate-union-aggregate chain was two sequential pair exchanges).
-
-    Physical shape (r6 rework — guide §2.4 "two operations keyed the
-    same way can share one exchange"):
-
-        bands → Exchange(band_hash)                  THE shuffle, once
-          ├─ Window count(*) over band_hash → cap filter → join side a
-          └─ Window count(*) over band_hash → cap filter → join side b
-                                  └── SHJ self-join → (id_a < id_b)
-
-    * Bucket sizing is a COUNT WINDOW over the band exchange instead of
-      the r3 repartition→persist→groupBy→semi-join chain: the window's
-      partition key equals the join key, so its output partitioning
-      feeds the self-join directly and AQE stage reuse serves both join
-      sides from the ONE materialized shuffle.  This removes, per edge
-      query: the explicit ``repartition`` node, the block-manager cache
-      (write + bookkeeping + 3 cached reads of ~16 B/row × b bands —
-      at 10⁹ files a ~400 GB cache the shuffle files already hold), the
-      bucket-size aggregation exchange, and the capping semi-join.
-      Bucket membership is unchanged: the window count equals the old
-      groupBy count, and the 2 ≤ n ≤ cap filter keeps exactly the same
-      rows, so candidate sets — and every downstream fingerprint — are
-      bit-identical (A/B-verified at sf0.1 and against the DuckDB
-      oracles at sf0.001).
-    * Expansion is a codegen'd shuffled-hash self-equi-join, not
-      collect_list + nested transform/slice lambdas: higher-order
-      Catalyst lambdas evaluate interpreted PER ELEMENT, which at the
-      measured ~200× bucket amplification (27.8M co-bucket rows from
-      123k final pairs at the 300k bench corpus) made the expansion
-      itself the stage bottleneck — the join form streams the same
-      m(m-1)/2 pairs per bucket through whole-stage codegen at ~2× the
-      throughput, and the ``shuffle_hash`` hint keeps AQE from
-      broadcasting a multi-hundred-MB build side (the GC-thrash mode
-      measured with the default planner).
-    * Hot-key safety: the window count is evaluated before any pair is
-      emitted, so a degenerate key (empty files, license boilerplate at
-      10^6 copies) is filtered from BOTH join sides and never
-      materializes m² pairs.  Per-partition SHJ build sides are bounded
-      by the cap filter + uniform xxhash64 keys; AQE skew handling
-      stays on as backstop.
-
-    ``observation``: an optional ``pyspark.sql.Observation`` attached to
-    join side a's pre-filter stream (evaluated exactly once) — after the
-    caller's first action it yields ``dropped_band_buckets`` and
-    ``max_bucket_size`` with zero extra jobs.  The observed side orders
-    its window by ``id`` so a ``row_number() == 1`` row deterministically
-    represents each bucket; the count frame is pinned to the full
-    partition so ``bs`` is the whole-bucket size either way.
-
-    Returns ``(raw_pairs, dropped_log)`` — ``dropped_log`` is a lazy
-    sidecar relation (band_hash, bucket_size of every over-cap bucket);
-    reading it is a separate action, metrics-only callers should pass
-    ``observation`` instead.
-    """
-    keys = ["band_hash"]
-    w = Window.partitionBy(*keys)
-    in_cap = (F.col("bs") >= 2) & (F.col("bs") <= band_bucket_cap)
-    plain = bands.select(
-        "id", *keys, F.count(F.lit(1)).over(w).alias("bs")
+) -> DataFrame:
+    """(id, band_hash) → raw co-bucket pair stream (id_a, id_b), one row
+    per (pair, shared band), buckets capped by :func:`capped_pairs`.
+    Callers aggregate per pair downstream (the pipeline fuses the
+    sha-equality edges into the same groupBy).  Dropped buckets are
+    counted through ``observation``; the pipeline writes them into the
+    candidates stage manifest."""
+    _, pairs = capped_pairs(
+        bands.select("id", "band_hash"), "band_hash", "id", band_bucket_cap,
+        observation,
     )
-    if observation is not None:
-        wo = w.orderBy("id")
-        full = wo.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        a_src = (
-            bands.select(
-                "id",
-                *keys,
-                F.count(F.lit(1)).over(full).alias("bs"),
-                F.row_number().over(wo).alias("rn"),
-            )
-            .observe(
-                observation,
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            (F.col("bs") > band_bucket_cap) & (F.col("rn") == 1),
-                            1,
-                        )
-                    ),
-                    F.lit(0),
-                ).alias("dropped_band_buckets"),
-                F.coalesce(F.max("bs"), F.lit(0)).alias("max_bucket_size"),
-            )
-            .filter(in_cap)
-        )
-    else:
-        a_src = plain.filter(in_cap)
-    b_src = plain.filter(in_cap)
-    raw = (
-        a_src.select(*keys, F.col("id").alias("id_a"))
-        .join(
-            b_src.select(*keys, F.col("id").alias("id_b")).hint("shuffle_hash"),
-            keys,
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    dropped = (
-        bands.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > band_bucket_cap)
-    )
-    return raw, dropped
+    return pairs.select("id_a", "id_b")
 
 
 def candidate_pairs(
     bands: DataFrame,
     band_bucket_cap: int,
     observation: Observation | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(id, band_hash) → (candidate pairs, dropped-bucket log).
-
-    Thin aggregation over ``band_pair_stream`` (see there for the
-    hot-key/exchange-reuse story): per-pair band-hit counts for callers
-    that consume the deduplicated pair set directly.
-
-    Returns
-    -------
-    pairs : DataFrame(id_a, id_b, n_bands_hit) with id_a < id_b, distinct.
-    dropped : DataFrame(band_hash, bucket_size) — buckets over the cap,
-        for callers that want the detailed sidecar (reading it is a
-        separate action; metrics-only callers should pass
-        ``observation`` instead).
-    """
-    raw, dropped = band_pair_stream(bands, band_bucket_cap, observation)
-    pairs = raw.groupBy("id_a", "id_b").agg(
-        F.count(F.lit(1)).alias("n_bands_hit")
+) -> DataFrame:
+    """(id, band_hash) → distinct candidate pairs (id_a, id_b,
+    n_bands_hit) with id_a < id_b."""
+    return (
+        band_pair_stream(bands, band_bucket_cap, observation)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_bands_hit"))
     )
-    return pairs, dropped
 
 
 def incremental_candidate_pairs(
@@ -200,29 +138,20 @@ def incremental_candidate_pairs(
     from ``new_bands`` (new×old and new×new; old×old pairs are the
     base index's own business).
 
-    ``all_bands`` must be the ACCUMULATED index (base ∪ new): bucket
-    sizes — and the hot-bucket cap — are evaluated on the accumulated
-    state, the same dropped-bucket semantics the streaming path
-    documents (``streaming.incremental.dedup_batch``, which delegates
-    here).  ``countDistinct`` not ``count``: a new×new pair appears in
-    BOTH orientations of the asymmetric join, a new×old pair in one —
-    the distinct band-key count is orientation-proof either way.
-
-    100-TB shape: a bucket with no NEW member can never emit a
-    ≥1-new-endpoint candidate, so the accumulated index is pruned to
-    the new batch's band keys FIRST (a semi-join AQE broadcasts when
-    the batch is micro) — the full index is never shuffled on behalf
-    of a small batch; bucket sizes (and the hot-bucket cap, which must
-    see ACCUMULATED size) are then computed over the pruned slice
-    only, which contains every member of every touched bucket and is
-    therefore exactly the accumulated size for those buckets.
+    ``all_bands`` must be the ACCUMULATED index (base ∪ new): the cap
+    of :func:`capped_pairs` is evaluated on accumulated bucket sizes,
+    the dropped-bucket semantics the streaming path documents
+    (``streaming.incremental.dedup_batch``, which delegates here).  A
+    bucket with no new member can never emit a candidate, so the index
+    is first pruned to the new batch's band keys (a semi-join AQE
+    broadcasts when the batch is micro); the pruned slice holds every
+    member of every touched bucket, so its sizes are the accumulated
+    ones.  ``countDistinct``: a new×new pair appears in both
+    orientations of the asymmetric join, a new×old pair in one.
 
     ``touched_keys``: callers whose new side is a BOUNDED micro-batch
-    (e.g. the 15 planted wrapper docs of
-    ``queries.substring_containment_pairs``) may pre-collect the new
-    band keys and pass them here — the prune then becomes a map-side
-    literal ``isin`` filter (the dynamic-partition-pruning shape, two
-    fewer stage boundaries than the semi-join).  Unbounded callers
+    may pre-collect the new band keys and pass them here — the prune
+    then becomes a map-side literal ``isin`` filter.  Unbounded callers
     (streaming batches) pass None and get the semi-join.
     """
     keys = ["band_hash"]
@@ -230,22 +159,15 @@ def incremental_candidate_pairs(
         all_touched = all_bands.filter(F.col("band_hash").isin(touched_keys))
     else:
         touched = new_bands.select(*keys).distinct()
-        # no broadcast hint: micro-batches broadcast via AQE runtime
-        # stats; a large streaming batch falls back to a shuffled
-        # semi-join
         all_touched = all_bands.join(touched, keys, "leftsemi")
-    sizes = all_touched.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-    eligible = sizes.filter(
-        (F.col("n") >= 2) & (F.col("n") <= band_bucket_cap)
-    ).select(*keys)
-    new_side = new_bands.join(eligible, keys).select(
-        *keys, F.col("id").alias("id_new")
-    )
-    all_side = all_touched.join(eligible, keys).select(
-        *keys, F.col("id").alias("id_other")
+    # capped keys of size 1 hold only the new row itself, which the
+    # id_new != id_other filter drops
+    capped, _ = capped_pairs(
+        all_touched.select("id", *keys), keys, "id", band_bucket_cap
     )
     return (
-        new_side.join(all_side, keys)
+        new_bands.select(*keys, F.col("id").alias("id_new"))
+        .join(capped.select(*keys, F.col("id").alias("id_other")), keys)
         .filter(F.col("id_new") != F.col("id_other"))
         .select(
             "band_hash",

@@ -42,47 +42,16 @@ DEFAULT_BUCKET_CAP = 2_000
 def _capped_signatures(
     sigs: DataFrame, bucket_cap: int
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(id, vec_sha, table_id, bucket) → (under-cap rows, dropped-bucket
-    log, the full signature stream — the exact-pair rescue reads the
-    latter: it must see rows in DROPPED buckets too).
-
-    Same count-first discipline as ``candidates.candidate_pairs``:
-    bucket sizes are aggregated FIRST (map-side combine absorbs hot
-    keys), over-cap keys are filtered out, and only then does the
-    self-join expand — a 10^6-copy embedding family can never create
-    10^12 candidate rows.  The size-filter join and the pair join share
-    the (table_id, bucket) key, so the exchange is reused.
-
-    Bucket sizing is a count WINDOW over the one hash(table_id, bucket)
-    exchange (r6 — the ``candidates.band_pair_stream`` rework): the
-    window's partition keys equal the self-join keys, so both pair
-    sides, and the exact-pair rescue's unfiltered read (third return —
-    it must see rows in DROPPED buckets too), are served by AQE
-    exchange reuse from that single materialized shuffle.  The
-    hyperplane matmul UDF therefore runs once, on the exchange's map
-    side, with no persist (a cached relation below the exchange would
-    BREAK exchange reuse — InMemoryRelation subtrees do not
-    canonicalize equal in Spark 4.1 — re-running the UDF per consumer).
-    The 8-byte ``vec_sha`` rides the same rows so the rescue still
-    costs no second corpus pass.
-    """
+    """(id, vec_sha, table_id, bucket) → (under-cap rows, their
+    id_a < id_b bucket pairs, every row).  The exact-pair rescue reads
+    every row: it must see rows in DROPPED buckets too.  No persist
+    below: a cached relation would break the exchange reuse of
+    :func:`candidates.capped_pairs` (InMemoryRelation subtrees do not
+    canonicalize equal in Spark 4.1)."""
     keys = ["table_id", "bucket"]
-    plain = sigs.select(
-        "id",
-        "vec_sha",
-        *keys,
-        F.count(F.lit(1)).over(Window.partitionBy(*keys)).alias("bs"),
-    )
-    capped = plain.filter(
-        (F.col("bs") >= 2) & (F.col("bs") <= bucket_cap)
-    ).drop("bs")
-    all_rows = plain.drop("bs")
-    dropped = (
-        sigs.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > bucket_cap)
-    )
-    return capped, dropped, all_rows
+    rows = sigs.select("id", "vec_sha", *keys)
+    capped, pairs = cand_ops.capped_pairs(rows, keys, "id", bucket_cap)
+    return capped, pairs, rows
 
 
 def _exact_vector_pairs(sigs_cached: DataFrame, pair_cap: int) -> DataFrame:
@@ -90,10 +59,9 @@ def _exact_vector_pairs(sigs_cached: DataFrame, pair_cap: int) -> DataFrame:
     fast path that keeps identical-vector families (the very rows that
     overflow sign-sketch buckets) pairable after the bucket cap.
 
-    Reads the full signature stream off the shared bucket exchange
-    (which carries ``vec_sha`` computed in the same scan as the sketch
-    — no second corpus pass; one table's rows suffice since vec_sha
-    repeats per table) and reuses the sha-equality kernel: groups ≤
+    Reads the signature rows, which carry ``vec_sha`` computed in the
+    same scan as the sketch (one table's rows suffice since vec_sha
+    repeats per table), and reuses the sha-equality kernel: groups ≤
     ``pair_cap`` emit all pairs, larger groups emit linear star edges
     (same components, bounded output) — see
     ``candidates.exact_duplicate_pairs``."""
@@ -259,7 +227,7 @@ def lsh_topk(
     sigs = hyperplane_signatures(
         embeddings, dim, n_bits, n_tables, seed, id_col, vec_col
     )
-    capped, _dropped, sx = _capped_signatures(sigs, bucket_cap)
+    capped, _pairs, sx = _capped_signatures(sigs, bucket_cap)
     a = capped.select("table_id", "bucket", F.col("id").alias("query_id"))
     b = capped.select("table_id", "bucket", F.col("id").alias("neighbor_id"))
     if exact_from_scan:
@@ -472,14 +440,10 @@ def embedding_cosine_dup_pairs(
     if dim is None:
         dim = len(embeddings.select(vec_col).first()[0])
     sigs = hyperplane_signatures(embeddings, dim, n_bits, n_tables, seed, id_col, vec_col)
-    capped, _dropped, sx = _capped_signatures(sigs, bucket_cap)
-    a = capped.select("table_id", "bucket", F.col("id").alias("id_a"))
-    b = capped.select("table_id", "bucket", F.col("id").alias("id_b"))
+    _capped, pairs, sx = _capped_signatures(sigs, bucket_cap)
     exact = _exact_vector_pairs(sx, bucket_cap)
     cand = (
-        a.join(b, ["table_id", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        pairs.select("id_a", "id_b")
         .unionByName(exact)
         .distinct()
     )

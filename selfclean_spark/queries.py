@@ -253,29 +253,13 @@ def _ngram_pairs_from_postings(exploded: DataFrame) -> DataFrame:
     than re-tokenizing — the cache below the postings breaks AQE
     exchange reuse, materializing the posting shuffle once per
     consumer; see ``dedup_method_agreement``.)"""
-    # df-cut via a count window over the ONE hash(sh) exchange (r6,
-    # guide §2.4): the window's partition key equals the self-join key,
-    # so both join sides and the per-doc size count are served by AQE
-    # exchange reuse from a single materialized shuffle — the tokenize/
-    # explode pass runs once with no persist, no cache bookkeeping, and
-    # no df-count + semi-join chain.  Capped postings are identical
-    # (window count == groupBy count), so the pair set is unchanged.
-    shingled = (
-        exploded.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-        )
-        .filter(F.col("df") <= NGRAM_MAX_DOC_FREQ)
-        .drop("df")
+    shingled, pairs = cand_ops.capped_pairs(
+        exploded, "sh", "doc_id", NGRAM_MAX_DOC_FREQ
     )
     sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingled.select(F.col("doc_id").alias("id_a"), "sh")
-    b = shingled.select(F.col("doc_id").alias("id_b"), "sh")
-    common = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    common = pairs.groupBy(
+        F.col("doc_id_a").alias("id_a"), F.col("doc_id_b").alias("id_b")
+    ).agg(F.count(F.lit(1)).alias("n_common"))
     return (
         common.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a")), "id_a")
         .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
@@ -2058,23 +2042,14 @@ def source_overlap_pairs(spark, sf_dir):
         )
     )
     grams = toks.select("source", F.explode(gram_arr).alias("h")).distinct()
-    capped = (
-        grams.withColumn(
-            "sdf", F.count(F.lit(1)).over(Window.partitionBy("h"))
-        )
-        .filter(F.col("sdf") <= OVERLAP_SOURCE_DF_CAP)
-        .drop("sdf")
+    capped, pairs = cand_ops.capped_pairs(
+        grams, "h", "source", OVERLAP_SOURCE_DF_CAP
     )
     sizes = capped.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    a = capped.select(F.col("source").alias("source_a"), "h")
-    b = capped.select(F.col("source").alias("source_b"), "h")
-    shared = (
-        a.join(b, "h")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+    shared = pairs.groupBy("source_a", "source_b").agg(
+        F.count(F.lit(1)).cast("long").alias("n_shared")
     )
     sz_a = F.broadcast(
         sizes.select(F.col("source").alias("source_a"), F.col("n").alias("n_a"))

@@ -14,6 +14,35 @@ import __spark_entry__ as entry_mod  # noqa: E402
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _norm(values):
+    return tuple(round(v, 9) if isinstance(v, float) else v for v in values)
+
+
+def _assert_oracle_parity(spark, name):
+    """The oracle compare protocol: the query and its DuckDB twin
+    agree value-for-value at sf0.001 over sorted columns, floats
+    rounded to 9 decimals, on a non-vacuous result.  Returns the Spark
+    result."""
+    import duckdb
+
+    sdf = entry_mod.queries()[name](spark, SF_DIR)
+    cols = sorted(sdf.columns)
+    got = sorted(_norm(r[c] for c in cols) for r in sdf.collect())
+    assert got, f"{name}: result must be non-vacuous"
+    con = duckdb.connect()
+    for f in sorted(os.listdir(SF_DIR)):
+        if f.endswith(".parquet"):
+            con.execute(
+                f"CREATE VIEW {f[:-len('.parquet')]} AS SELECT * FROM "
+                f"read_parquet('{SF_DIR}/{f}')"
+            )
+    odf = con.execute(entry_mod.oracle_sql()[name]).fetch_df()
+    assert sorted(odf.columns) == cols
+    want = sorted(_norm(row) for row in odf[cols].itertuples(index=False))
+    assert got == want
+    return sdf
+
+
 def test_entry_returns_rows(spark):
     df = entry_mod.entry(spark)
     assert df.count() >= 0
@@ -33,29 +62,6 @@ def test_query_runs(spark, name):
     df = fn(spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.columns) > 0
-
-
-def test_simhash_oracle_parity(spark):
-    """The DuckDB HUGEINT SimHash twin reproduces the Spark sketch
-    bit-exactly: same (id_a, id_b, hamming) set at sf0.001."""
-    import duckdb
-
-    got = sorted(
-        tuple(r) for r in entry_mod.queries()["simhash_near_pairs"](
-            spark, SF_DIR
-        ).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{SF_DIR}/documents.parquet')"
-    )
-    want = sorted(
-        tuple(r) for r in con.execute(
-            entry_mod.oracle_sql()["simhash_near_pairs"]
-        ).fetchall()
-    )
-    assert got == want
 
 
 def test_isolation_oracle_parity(spark):
@@ -90,26 +96,7 @@ def test_reference_core_ranking_oracle_parity(spark, name):
     ranking, label-error/lang-mismatch ranking, auto-cleaning cut —
     r3's hard-oracle additions) match their DuckDB twins value-for-value
     at sf0.001, under the driver's sorted-columns compare protocol."""
-    import duckdb
-
-    sdf = entry_mod.queries()[name](spark, SF_DIR)
-    cols = sorted(sdf.columns)
-    got = sorted(
-        tuple(round(v, 9) if isinstance(v, float) else v for v in (r[c] for c in cols))
-        for r in sdf.collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{SF_DIR}/documents.parquet')"
-    )
-    odf = con.execute(entry_mod.oracle_sql()[name]).fetch_df()
-    assert sorted(odf.columns) == cols
-    want = sorted(
-        tuple(round(v, 9) if isinstance(v, float) else v for v in row)
-        for row in odf[cols].itertuples(index=False)
-    )
-    assert got == want
+    sdf = _assert_oracle_parity(spark, name)
     if name == "auto_cut_flags":  # the cut must be non-vacuous
         flags = {bool(r.auto_issue) for r in sdf.collect()}
         assert flags == {True, False}
@@ -155,30 +142,47 @@ def test_release_check_oracle_parity(spark, name):
     exercised on non-trivial positives and negatives), GPT-3-style
     exact 8-gram contamination, the dedup keep manifest, and the
     Gopher repetition stats."""
-    import duckdb
-
     from selfclean_spark import caching
 
     caching.clear()
-    sdf = entry_mod.queries()[name](spark, SF_DIR)
-    cols = sorted(sdf.columns)
-    got = sorted(
-        tuple(round(v, 9) if isinstance(v, float) else v for v in (r[c] for c in cols))
-        for r in sdf.collect()
-    )
-    assert got, "release-check result must be non-vacuous"
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{SF_DIR}/documents.parquet')"
-    )
-    odf = con.execute(entry_mod.oracle_sql()[name]).fetch_df()
-    assert sorted(odf.columns) == cols
-    want = sorted(
-        tuple(round(v, 9) if isinstance(v, float) else v for v in row)
-        for row in odf[cols].itertuples(index=False)
-    )
-    assert got == want
+    _assert_oracle_parity(spark, name)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "minhash_verified_pairs",
+        "minhash_components",
+        "ngram_jaccard_pairs",
+        "dedup_method_agreement",
+        "token_jaccard_pairs",
+        "simhash_near_pairs",
+        "repo_fork_pairs",
+        "winnow_clone_pairs",
+        "block_clone_pairs",
+        "source_overlap_pairs",
+        "dedup_graph_triangles",
+        "substring_containment_pairs",
+        "exact_components",
+    ],
+)
+def test_capped_index_oracle_parity(spark, name):
+    """Every query built on the capped co-occurrence primitive
+    (``candidates.capped_pairs``: LSH bands, inverted indexes, simhash
+    blocks) matches its DuckDB twin.  ``substring_containment_pairs``
+    runs with the session edge cache warm, so its incremental new×all
+    join is the path checked (the release-check test covers the cold
+    batch path)."""
+    from selfclean_spark import caching
+    from selfclean_spark import queries as Q
+
+    caching.clear()
+    try:
+        if name == "substring_containment_pairs":
+            Q._docs_edges(spark, SF_DIR).count()
+        _assert_oracle_parity(spark, name)
+    finally:
+        caching.clear()
 
 
 def test_substring_confirm_kernel(spark):

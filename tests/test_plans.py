@@ -39,7 +39,7 @@ def test_candidates_plan_never_reads_content(tables):
     _cf, sigs = tables
     cfg = PipelineConfig()
     bands = sig_ops.band_hashes(sigs, cfg.signature)
-    pairs, _ = cand_ops.candidate_pairs(bands, cfg.band_bucket_cap)
+    pairs = cand_ops.candidate_pairs(bands, cfg.band_bucket_cap)
     plan = _plan(pairs)
     read_schemas = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read_schemas, "expected parquet scans in plan"
@@ -61,6 +61,44 @@ def test_candidates_plan_never_reads_content(tables):
     # expansion is the codegen'd shuffled-hash self-join, never a
     # broadcast of the multi-hundred-MB band table
     assert "BroadcastHashJoin" not in plan
+
+
+def test_observed_band_stream_shuffles_bands_once(spark, tmp_path):
+    """Both self-join sides of the observed band stream read identical
+    exchange subtrees, so AQE reuses ONE band shuffle: exactly one
+    shuffle-writing stage, and the observation still resolves."""
+    from pyspark.sql import Observation
+
+    path = str(tmp_path / "bands")
+    spark.range(20_000).select(
+        "id", (F.xxhash64("id") % 3_000).alias("band_hash")
+    ).write.parquet(path)
+    obs = Observation("band_buckets")
+    raw = cand_ops.band_pair_stream(spark.read.parquet(path), 200, obs)
+    sc = spark.sparkContext
+    group = "observed-band-stream"
+    sc.setJobGroup(group, group)
+    try:
+        assert raw.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    stage_ids = {
+        sid
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    }
+    writers = []
+    for sid in stage_ids:
+        try:
+            attempt = store.lastStageAttempt(sid)
+        except Exception:  # a skipped stage has no attempt
+            continue
+        if attempt.shuffleWriteBytes() > 0:
+            writers.append(sid)
+    assert len(writers) == 1, writers
+    assert obs.get["dropped_band_buckets"] == 0
 
 
 def test_metadata_join_prunes_content(tables):
@@ -103,7 +141,7 @@ def test_verify_plan_content_only_in_shingle_and_rescue(tables):
     cf, sigs = tables
     ing = with_identity(cf)
     bands = sig_ops.band_hashes(sigs, PipelineConfig().signature)
-    pairs, _ = cand_ops.candidate_pairs(bands, 200)
+    pairs = cand_ops.candidate_pairs(bands, 200)
 
     # no substring confirm: exactly ONE content-reading scan (the
     # shingle semi-join) and no per-pair content columns anywhere

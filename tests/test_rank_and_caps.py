@@ -41,12 +41,14 @@ def test_exact_dup_star_edges_for_giant_groups(spark):
 
 
 def test_candidate_hot_bucket_dropped_and_logged(spark):
+    from pyspark.sql import Observation
+
     rows = [(i, 7777) for i in range(30)] + [(100, 42), (101, 42)]
     bands = spark.createDataFrame(rows, "id long, band_hash long")
-    pairs, dropped = candidate_pairs(bands, band_bucket_cap=10)
+    obs = Observation("band_buckets")
+    pairs = candidate_pairs(bands, band_bucket_cap=10, observation=obs)
     assert pairs.count() == 1  # only the small bucket pairs up
-    d = dropped.collect()
-    assert len(d) == 1 and d[0].bucket_size == 30
+    assert obs.get == {"dropped_band_buckets": 1, "max_bucket_size": 30}
 
 
 def test_with_global_rank_registers_no_persist(spark):
