@@ -1,25 +1,72 @@
-"""Scalable global ranking (replaces single-partition windows).
+"""Global rank and running sum without a single-partition window.
 
 ``row_number() OVER (ORDER BY …)`` with no PARTITION BY collapses the
-whole relation into one task — fine at test scale, a bottleneck at
-10^12.  The classic two-pass pattern used here:
+whole relation into one task.  Both functions here run in two passes:
 
-1. range-partition by the sort key + sort within partitions
-   (this is exactly what a global ``orderBy`` does physically);
-2. one small action collects per-partition row counts → cumulative
-   offsets (driver-side, #partitions entries);
-3. within-partition ``row_number`` (parallel window) + broadcast-joined
-   offset = the global rank.
+1. sort by the key (range partitioning + in-partition sort), tag every
+   row with its partition id ``_pid`` and ``localCheckpoint`` the result,
+   so pass 2 reads the very partitions pass 1 counted;
+2. collect one aggregate per partition (#partitions rows), turn it into
+   exclusive prefix offsets on the driver, and add each row's offset to
+   a per-partition window value.
 
-The sorted frame is materialized (localCheckpoint) between the two
-passes so both read the same partitioning — the checkpointed leaf
-freezes the sampled range bounds and partition ids.
+Callers order by a TOTAL order (tie-broken by id), so the output does
+not depend on the partitioning.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from selfclean_spark.functions.local_table import local_table
+
+
+def _sorted_with_pid(
+    df: DataFrame, order_cols: list[Column], num_partitions: int | None
+) -> DataFrame:
+    """Pass 1. ``orderBy`` lets AQE size the range partitions by data
+    bytes; an explicit ``num_partitions`` pins ``repartitionByRange``."""
+    if num_partitions is not None:
+        n_parts = max(1, min(num_partitions, 2000))
+        sorted_plan = df.repartitionByRange(
+            n_parts, *order_cols
+        ).sortWithinPartitions(*order_cols)
+    else:
+        sorted_plan = df.orderBy(*order_cols)
+    return sorted_plan.withColumn(
+        "_pid", F.spark_partition_id()
+    ).localCheckpoint(eager=True)
+
+
+def _partition_offsets(sorted_df: DataFrame, total: Column) -> dict[int, int]:
+    """Exclusive prefix sums of ``total`` per non-empty ``_pid``."""
+    rows = sorted_df.groupBy("_pid").agg(total.alias("_t")).collect()
+    offsets, running = {}, 0
+    for row in sorted(rows, key=lambda r: r["_pid"]):
+        offsets[row["_pid"]] = running
+        running += row["_t"]
+    return offsets
+
+
+def _add_offsets(
+    sorted_df: DataFrame, offsets: dict[int, int], local: Column, out_col: str
+) -> DataFrame:
+    """``out_col`` = the row's partition offset + its ``local`` window
+    value, through a broadcast join on a driver-built offsets table."""
+    offsets_df = F.broadcast(
+        local_table(
+            sorted_df.sparkSession,
+            [list(offsets), list(offsets.values())],
+            "_pid int, _offset long",
+        )
+    )
+    return (
+        sorted_df.withColumn("_local", local)
+        .join(offsets_df, "_pid")
+        .withColumn(out_col, (F.col("_offset") + F.col("_local")).cast("long"))
+        .drop("_pid", "_local", "_offset")
+    )
 
 
 def with_global_rank(
@@ -28,56 +75,18 @@ def with_global_rank(
     rank_col: str = "rank",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Add a 1-based dense global ``rank_col`` ordered by
-    ``order_cols`` without a single-partition window.
+    """Add a 1-based dense global ``rank_col`` ordered by ``order_cols``.
 
-    The returned DataFrame is range-partitioned and sorted by the key
-    (so a downstream ``orderBy(rank)`` is a no-shuffle sort).
-
-    r6 pass-1 shape: the sort is a plain ``orderBy`` — AQE sizes the
-    range-shuffle read by DATA bytes (advisory partition size), so a
-    300-row ranking gets one partition and a 10¹²-row one gets
-    thousands, instead of the fixed ``spark.sql.shuffle.partitions``
-    fan-out the old ``repartitionByRange(n)`` pinned — and the sorted
-    frame is materialized with ``localCheckpoint`` rather than persist:
-    partition ids are frozen in the checkpointed leaf (the old persist
-    existed to pin sampled range bounds), pass 2's window plans against
-    a leaf instead of re-embedding the whole upstream tree, and AQE
-    exchange reuse above a LogicalRDD works (an InMemoryRelation in the
-    same spot defeats it in Spark 4.1).  An explicit ``num_partitions``
-    falls back to the pinned ``repartitionByRange`` for callers that
-    need a fixed layout.  Ranks are partitioning-independent because
-    every caller orders by a TOTAL order (tie-broken by id).
+    The result is range-partitioned and sorted by the key, so a
+    downstream ``orderBy(rank)`` needs no shuffle.  Ranks equal a
+    single-partition ``row_number`` for any partitioning, empty range
+    partitions included; an empty input gives an empty result with the
+    same schema.
     """
-    spark = df.sparkSession
-    if num_partitions is not None:
-        n_parts = max(1, min(num_partitions, 2000))
-        sorted_plan = df.repartitionByRange(
-            n_parts, *order_cols
-        ).sortWithinPartitions(*order_cols)
-    else:
-        sorted_plan = df.orderBy(*order_cols)
-    sorted_df = sorted_plan.withColumn(
-        "_pid", F.spark_partition_id()
-    ).localCheckpoint(eager=True)
-    counts = sorted_df.groupBy("_pid").count().collect()
-    offsets = {}
-    running = 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = running
-        running += row["count"]
-    offsets_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
-        )
-    )
+    sorted_df = _sorted_with_pid(df, order_cols, num_partitions)
+    offsets = _partition_offsets(sorted_df, F.count(F.lit(1)))
     w = Window.partitionBy("_pid").orderBy(*order_cols)
-    return (
-        sorted_df.withColumn("_local", F.row_number().over(w))
-        .join(offsets_df, "_pid")
-        .withColumn(rank_col, (F.col("_offset") + F.col("_local")).cast("long"))
-        .drop("_pid", "_local", "_offset")
-    )
+    return _add_offsets(sorted_df, offsets, F.row_number().over(w), rank_col)
 
 
 def with_global_cumsum(
@@ -89,82 +98,35 @@ def with_global_cumsum(
     impl: str = "window",
 ) -> DataFrame:
     """Add an INCLUSIVE global running sum of ``value_col`` ordered by
-    ``order_cols`` — two-pass like ``with_global_rank`` (range-partition
-    + per-partition SUM offsets collected driver-side, #partitions
-    rows), never a single-partition window.  This is the kernel behind
-    deterministic token-budget sharding: at 10^12 rows a ``sum() OVER
-    (ORDER BY …)`` with no PARTITION BY would serialize the whole
-    corpus through one task.
+    ``order_cols``; it equals a single-partition window sum for any
+    partitioning.
 
-    Two byte-identical pass-2 implementations (fingerprint-equal at 5M
-    and 20M rows; parity pytest):
+    Pass 2 has two implementations with identical output:
 
-    - ``impl="window"`` (default): per-partition window keyed by
-      ``_pid`` + broadcast offset join.  Entirely JVM-side, but the
-      window's required clustering makes Spark insert a SECOND
-      full-corpus Exchange (hashpartitioning on ``_pid``) after the
-      range shuffle.  Measured FASTER wherever we can measure
-      (local[32] best-of-2: 1.57 s vs 2.29 s at 5M rows, 3.76 s vs
-      7.21 s at 20M — a local-mode exchange is a memory copy while the
-      Arrow hop costs real CPU).
-    - ``impl="arrow"``: ``mapInPandas`` running sum over the
-      already-sorted partitions — ZERO extra Exchange.  The pick for
-      shuffle-constrained multi-executor clusters, where the second
-      full-corpus exchange is network+disk I/O rather than a local
-      memory copy and the Arrow pass pipelines with the cached scan.
-
-    The A/B and the reasoning live in BENCH/BASELINE.md ("cumsum
-    pass-2").
+    - ``impl="window"``: a per-``_pid`` window plus the broadcast offset
+      join; all JVM, but the window's clustering adds a second corpus
+      Exchange (hashpartitioning on ``_pid``).  Faster in local mode,
+      where that exchange is a memory copy.
+    - ``impl="arrow"``: a ``mapInPandas`` running sum over the sorted
+      partitions; no extra Exchange, for clusters where the shuffle
+      costs network and disk.
     """
     from pyspark.sql.types import LongType, StructField, StructType
 
-    spark = df.sparkSession
-    # same r6 pass-1 shape as with_global_rank: AQE-sized orderBy +
-    # localCheckpoint (see there); explicit num_partitions pins the
-    # old repartitionByRange layout
-    if num_partitions is not None:
-        n_parts = max(1, min(num_partitions, 2000))
-        sorted_plan = df.repartitionByRange(
-            n_parts, *order_cols
-        ).sortWithinPartitions(*order_cols)
-    else:
-        sorted_plan = df.orderBy(*order_cols)
-    sorted_df = sorted_plan.withColumn(
-        "_pid", F.spark_partition_id()
-    ).localCheckpoint(eager=True)
-    sums = sorted_df.groupBy("_pid").agg(
-        F.sum(value_col).cast("long").alias("_s")
-    ).collect()
-    offsets = {}
-    running = 0
-    for row in sorted(sums, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = running
-        running += row["_s"]
+    sorted_df = _sorted_with_pid(df, order_cols, num_partitions)
+    offsets = _partition_offsets(sorted_df, F.sum(value_col).cast("long"))
 
     if impl == "window":
-        offsets_df = F.broadcast(
-            spark.createDataFrame(
-                [(pid, off) for pid, off in offsets.items()],
-                "_pid int, _offset long",
-            )
-        )
         w = (
             Window.partitionBy("_pid")
             .orderBy(*order_cols)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        return (
-            sorted_df.withColumn("_local", F.sum(value_col).over(w))
-            .join(offsets_df, "_pid")
-            .withColumn(
-                cumsum_col, (F.col("_offset") + F.col("_local")).cast("long")
-            )
-            .drop("_pid", "_local", "_offset")
-        )
+        return _add_offsets(sorted_df, offsets, F.sum(value_col).over(w), cumsum_col)
     if impl != "arrow":
         raise ValueError(f"impl must be 'window' or 'arrow', got {impl!r}")
 
-    offsets_b = spark.sparkContext.broadcast(offsets)
+    offsets_b = df.sparkSession.sparkContext.broadcast(offsets)
     out_schema = StructType(
         sorted_df.schema.fields + [StructField(cumsum_col, LongType(), False)]
     )

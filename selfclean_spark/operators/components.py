@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from selfclean_spark import caching
+from selfclean_spark.functions.local_table import local_table
 from selfclean_spark.operators import candidates as cand_ops
 
 
@@ -172,8 +173,9 @@ def connected_components(
     )
     n_edges = int(obs0.get["n"])
     if n_edges == 0:
-        spark = edges.sparkSession
-        empty = spark.createDataFrame([], "id long, component_id long")
+        empty = local_table(
+            edges.sparkSession, [[], []], "id long, component_id long"
+        )
         return empty, 0
 
     prev_fp = (-1, -1)

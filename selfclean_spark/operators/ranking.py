@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from selfclean_spark.functions import sketches
+from selfclean_spark.functions.local_table import local_table
 from selfclean_spark.functions.rank import with_global_rank
 
 
@@ -144,12 +145,9 @@ def lad_offtopic_ranking(
     dist = 1.0 - agree
     np.fill_diagonal(dist, 0.0)
     scores, order = lad_ranking(dist)
-    spark = signatures.sparkSession
-    ranked = spark.createDataFrame(
-        [
-            (int(rank + 1), int(ids[idx]), float(score))
-            for rank, (score, idx) in enumerate(zip(scores, order))
-        ],
+    ranked = local_table(
+        signatures.sparkSession,
+        [np.arange(1, len(order) + 1), ids[order], scores],
         "rank int, id long, score double",
     )
     return ranked.join(metadata.select("id", "repo", "path", "lang"), "id").select(

@@ -23,6 +23,7 @@ from pyspark.sql.types import ArrayType, LongType
 from pyspark.storagelevel import StorageLevel
 
 from selfclean_spark.functions.distances import cosine_similarity, get_distance
+from selfclean_spark.functions.local_table import local_table
 from selfclean_spark.operators import candidates as cand_ops
 
 # native cosine similarity between two array<float/double> cols
@@ -668,8 +669,10 @@ def semdedup_prune(
         c: -(-(sizes[c] - cap) // max(int(slice_rows), 1)) for c in hot
     }
     salts_df = F.broadcast(
-        cells.sparkSession.createDataFrame(
-            [(c, n_salts[c]) for c in hot], "cell int, _n_salts int"
+        local_table(
+            cells.sparkSession,
+            [hot, [n_salts[c] for c in hot]],
+            "cell int, _n_salts int",
         )
     )
     rest = (

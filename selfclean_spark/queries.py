@@ -22,6 +22,7 @@ from pyspark.storagelevel import StorageLevel
 from selfclean_spark import caching
 from selfclean_spark.config import PipelineConfig, SignatureConfig
 from selfclean_spark.functions import text as T
+from selfclean_spark.functions.local_table import local_table
 from selfclean_spark.operators import candidates as cand_ops
 from selfclean_spark.operators.ingest import fanout_few_files
 from selfclean_spark.operators import dedup as D
@@ -2305,20 +2306,24 @@ def unimax_epoch_plan(spark, sf_dir):
     m = len(srcs)
     total = sum(r.n_tokens for r in srcs)
     budget = UNIMAX_BUDGET_NUM * total // UNIMAX_BUDGET_DEN
-    remaining, rows, k = budget, [], 0
+    remaining, k = budget, 0
     for j, r in enumerate(srcs):
         cap = UNIMAX_EPOCH_CAP * r.n_tokens
-        if cap * (m - j) <= remaining:
-            rows.append((r.source, r.n_tokens, True, float(cap)))
-            remaining -= cap
-            k += 1
-        else:
+        if cap * (m - j) > remaining:
             break
+        remaining -= cap
+        k += 1
     share = float(remaining) / (m - k) if k < m else 0.0
-    for r in srcs[k:]:
-        rows.append((r.source, r.n_tokens, False, share))
-    out = spark.createDataFrame(
-        rows, "source string, n_tokens long, saturated boolean, alloc double"
+    out = local_table(
+        spark,
+        [
+            [r.source for r in srcs],
+            [r.n_tokens for r in srcs],
+            [j < k for j in range(m)],
+            [float(UNIMAX_EPOCH_CAP * r.n_tokens) for r in srcs[:k]]
+            + [share] * (m - k),
+        ],
+        "source string, n_tokens long, saturated boolean, alloc double",
     )
     return out.select(
         "source",

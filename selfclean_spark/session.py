@@ -9,9 +9,13 @@ already set so ``spark-submit --conf`` always wins.
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 _DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -43,6 +47,41 @@ _DEFAULTS = {
 }
 
 
+_MIB_PER_UNIT = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024**2, "p": 1024**3}
+
+
+def _mem_total_kib() -> int | None:
+    """``MemTotal`` from /proc/meminfo, or None where there is none."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
+
+def clamp_driver_memory(requested: str, mem_total_kib: int | None) -> str:
+    """``requested`` (a JVM size string; a bare number is MiB, as for
+    ``spark.driver.memory``) capped at half of ``mem_total_kib``, so a
+    default heap never claims most of a small machine.  Unparsable
+    values and an unknown ``MemTotal`` pass through unchanged."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", requested.strip().lower())
+    if m is None or mem_total_kib is None:
+        return requested
+    requested_mib = int(m.group(1)) * _MIB_PER_UNIT[m.group(2) or "m"]
+    cap_mib = mem_total_kib // 2048
+    if requested_mib <= cap_mib:
+        return requested
+    clamped = f"{cap_mib}m"
+    _log.warning(
+        "spark.driver.memory %s exceeds half of MemTotal (%d KiB); using %s",
+        requested, mem_total_kib, clamped,
+    )
+    return clamped
+
+
 def get_spark(
     app_name: str = "selfclean_spark",
     master: str | None = None,
@@ -52,6 +91,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores when
     unset) in the sandbox; under spark-submit the submitted master wins.
+    ``spark.driver.memory`` is capped at half of the machine's memory
+    (:func:`clamp_driver_memory`).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
@@ -61,6 +102,9 @@ def get_spark(
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    conf["spark.driver.memory"] = clamp_driver_memory(
+        conf["spark.driver.memory"], _mem_total_kib()
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -6,6 +6,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -220,3 +221,58 @@ def test_bench_headline_names_exist():
     q = set(e.queries())
     missing = [n for n in bench.HEADLINE if n not in q]
     assert not missing, missing
+
+
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _empty_rank(spark):
+    from selfclean_spark.functions.rank import with_global_rank
+
+    df = spark.range(0).select("id", F.lit(1.0).alias("s"))
+    return with_global_rank(df, [F.col("s").asc(), F.col("id").asc()])
+
+
+def _edge_free_components(spark):
+    from selfclean_spark.operators.components import connected_components
+
+    loops = spark.range(5).select(
+        F.col("id").alias("id_a"), F.col("id").alias("id_b")
+    )
+    return connected_components(loops)[0]
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "near_dup_ranking",
+        "lang_mismatch_ranking",
+        "isolation_ranking",
+        "export_shard_plan",
+        "unimax_epoch_plan",
+        "lad_offtopic_planted",
+        "empty_global_rank",
+        "edge_free_components",
+    ],
+)
+def test_driver_tables_never_pickle_rows(spark, case):
+    """Driver-built tables (rank offsets, sampled rankings, query rows,
+    the empty component table) plan as a LocalTableScan: no
+    ``applySchemaToPythonRDD``, whose pickled-row tasks would start a
+    second Python worker family next to the Arrow UDFs."""
+    from selfclean_spark import caching
+
+    builders = {
+        "empty_global_rank": _empty_rank,
+        "edge_free_components": _edge_free_components,
+    }
+    if case in builders:
+        df = builders[case](spark)
+    else:
+        df = entry_mod.queries()[case](spark, SF_DIR)
+    plan = _formatted(df)
+    assert "applySchemaToPythonRDD" not in plan, plan
+    caching.clear(blocking=True)

@@ -395,6 +395,29 @@ def test_cc_long_chain_converges_in_log_rounds(spark):
     assert rounds <= 15, f"chain took {rounds} rounds (not logarithmic)"
 
 
+def test_cc_edge_free_input_is_empty_and_singletons_map_to_self(spark):
+    """Self-loops are not edges: the result is (empty, 0) with the
+    ``id long, component_id long`` schema, and ``with_singletons`` then
+    puts every id in its own component."""
+    from pyspark.sql.types import StructType
+
+    from selfclean_spark.operators.components import (
+        connected_components,
+        with_singletons,
+    )
+
+    universe = spark.range(6)
+    loops = universe.select(F.col("id").alias("id_a"), F.col("id").alias("id_b"))
+    comps, rounds = connected_components(loops)
+    assert rounds == 0
+    assert comps.count() == 0
+    assert comps.schema == StructType.fromDDL("id long, component_id long")
+    got = {
+        r.id: r.component_id for r in with_singletons(comps, universe).collect()
+    }
+    assert got == {i: i for i in range(6)}
+
+
 def test_cc_disjoint_cliques_and_star(spark):
     from selfclean_spark.operators.components import connected_components
 

@@ -94,3 +94,71 @@ def test_with_global_cumsum_matches_single_partition_window(spark, impl):
     for r in rows:
         running += r.v
         assert got[r.id] == running
+
+
+_RANK_IMPLS = ["rank", "cumsum_window", "cumsum_arrow"]
+
+
+def _ranked(df, impl, num_partitions=None):
+    from selfclean_spark.functions.rank import with_global_cumsum
+
+    order = [F.col("v").asc(), F.col("id").asc()]
+    if impl == "rank":
+        return with_global_rank(df, order, num_partitions=num_partitions)
+    return with_global_cumsum(
+        df, order, "v", num_partitions=num_partitions, impl=impl.split("_")[1]
+    )
+
+
+def _single_window(df, impl):
+    from pyspark.sql import Window
+
+    w = Window.orderBy(F.col("v").asc(), F.col("id").asc())
+    if impl == "rank":
+        return df.withColumn("rank", F.row_number().over(w))
+    return df.withColumn(
+        "cumsum",
+        F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+
+@pytest.mark.parametrize("impl", _RANK_IMPLS)
+def test_global_rank_and_cumsum_empty_input(spark, impl):
+    """An empty input gives 0 rows with the schema of a non-empty run."""
+    df = spark.range(0, 10).select("id", (F.col("id") % 3).alias("v"))
+    want = _ranked(df, impl).schema
+    got = _ranked(df.filter(F.lit(False)), impl)
+    assert got.count() == 0
+    assert got.schema == want
+
+
+@pytest.mark.parametrize("layout", ["more_partitions_than_rows", "pid_gaps"])
+@pytest.mark.parametrize("impl", _RANK_IMPLS)
+def test_global_rank_and_cumsum_partition_offsets_exact(
+    spark, monkeypatch, impl, layout
+):
+    """Ranks and cumsums equal a single-partition window exactly when
+    range partitions outnumber rows, and when the partition ids have
+    gaps. Range partitioning leaves at most trailing partitions empty,
+    so gaps are forced by renumbering the pass-1 ids (x3 + 1)."""
+    from selfclean_spark.functions import rank as R
+
+    df = spark.range(0, 23).select(
+        "id", (F.xxhash64("id") % 5 + 5).alias("v")
+    )
+    num_partitions = 64
+    if layout == "pid_gaps":
+        num_partitions = 4
+        pass1 = R._sorted_with_pid
+        monkeypatch.setattr(
+            R,
+            "_sorted_with_pid",
+            lambda *a: pass1(*a).withColumn("_pid", F.col("_pid") * 3 + 1),
+        )
+    got = _ranked(df, impl, num_partitions=num_partitions)
+    want = _single_window(df, impl)
+    assert _rows(got) == _rows(want)

@@ -2,7 +2,7 @@
 in ``TOUCHED`` into ``<out_dir>/<query>_<tag>.txt``.
 
 Usage: python tools/capture_plans.py <out_dir> <tag>
-e.g.   python tools/capture_plans.py plans/r07 after
+e.g.   python tools/capture_plans.py plans/r08 after
 
 Environment: ``SPARK_GRAFT_SF_DIR`` (corpus, default sf0.1) and
 ``SPARK_GRAFT_CPUS`` (local cores, default 32).  Existing dumps are
@@ -25,6 +25,8 @@ TOUCHED = [
     "dedup_cluster_histogram",
     "near_dup_ranking",
     "lang_mismatch_ranking",
+    "isolation_ranking",
+    "lad_offtopic_planted",
     "auto_cut_flags",
     "decontamination_pairs",
     "substring_containment_pairs",
@@ -39,6 +41,7 @@ TOUCHED = [
     "lsh_topk_ann",
     "embedding_dup_pairs",
     "export_shard_plan",
+    "unimax_epoch_plan",
     "source_novelty_report",
     "dedup_graph_triangles",
 ]
